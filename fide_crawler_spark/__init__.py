@@ -2,9 +2,10 @@
 
 Rebuilds the capabilities of ``rafaelvleite/fide_crawler`` (sequential
 requests+BeautifulSoup+pandas+SQLite) as an idiomatic Spark DataFrame
-pipeline: snapshot-table frontier, Bloom/cuckoo URL-seen dedup, per-host
-politeness with skew salting, windowed priority dequeue, vectorized
-Arrow fetch+parse emitting interleaved span records, and a full
+pipeline: snapshot-table frontier, partitioned-Bloom URL-seen dedup with
+an exact anti-join backstop (forced recrawl = frontier status flip), a
+fused per-host politeness + priority dequeue, vectorized Arrow
+fetch+parse emitting interleaved span records, and a full
 analytics surface (SURVEY.md §2) checked against a DuckDB oracle.
 """
 

@@ -200,8 +200,10 @@ def dequeue_rank(
       position ≤ budget, and assigns ``rank = survivor_offset +
       local_survivor_position``.
 
-    Output = politeness_cap_scalable(...) + grouped_rank(...) exactly
-    (asserted in tests/test_rank.py), at half the shuffle cost.
+    Output = a per-host ``row_number`` window capped at the budget,
+    then a global ``row_number`` over the survivors, exactly (asserted
+    in tests/test_rank.py and tests/test_crawl_pipeline.py), at half
+    the shuffle cost of running grouped_topk + grouped_rank.
 
     Driver fan-in is bounded: because the sort leads with the priority
     tuple (not host), a host's rows scatter across partitions, so the

@@ -11,18 +11,17 @@ Reference semantics (``data_processing/data_fetching_processing.py:207-245``):
   so a mid-month ``db_min`` causes its own month to be refetched —
   reproduced bit-for-bit here and pinned by tests.
 
-Forced recrawl (beyond the reference): a URL is re-admitted by deleting
-its fingerprint from the cuckoo filter (the deletable URL-seen variant —
-Bloom cannot delete) and resetting its frontier row to pending with a
-bumped ``recrawl_age`` so the priority queue favors it.
+Forced recrawl (beyond the reference): a URL is re-admitted by
+resetting its frontier row to pending with a bumped ``recrawl_age`` so
+the priority queue favors it.  The URL-seen Bloom filter is not touched:
+admission's exact anti-join backstop checks frontier status, so the
+status flip alone is the deletion.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from fide_crawler_spark.operators.urlseen import CuckooFilter
 
 
 def cached_bounds(games: DataFrame) -> DataFrame:
@@ -65,29 +64,20 @@ def gap_analysis(requests: DataFrame, bounds: DataFrame) -> DataFrame:
     )
 
 
-def force_recrawl(
-    frontier: DataFrame, urls: DataFrame, cuckoo
-) -> tuple[DataFrame, "CuckooFilter"]:
-    """Re-admit specific URLs: delete their fingerprints from the
-    deletable URL-seen filter (CuckooFilter or PartitionedCuckoo — both
-    expose delete) and reset their frontier rows to pending with
-    recrawl_age+1 (priority boost per frontier.priority_order).
+def force_recrawl(frontier: DataFrame, urls: DataFrame) -> DataFrame:
+    """Re-admit specific URLs (``urls`` needs only a ``url`` column):
+    reset their frontier rows to pending with recrawl_age+1 (priority
+    boost per frontier.priority_order).
 
     Only rows currently ``fetched`` flip: a robots-'blocked' row must
     stay blocked (re-admitting it would bypass robots admission), and a
     pending/failed row is already on its way — flipping it would only
-    corrupt the scheduler's pending count.
-
-    The fingerprint deletes are driver-side here (the re-admission set
-    is operator-chosen and small); bulk inserts go through the sharded
-    executor-side path (urlseen.update_cuckoo)."""
-    for row in urls.select("url_hash").distinct().collect():
-        cuckoo.delete(int(row["url_hash"]))
+    corrupt the scheduler's pending count."""
     # distinct: a duplicated key would fan the join out and DUPLICATE
     # frontier rows (each copy then gets dequeued and fetched)
     keys = urls.select("url").distinct().withColumn("_force", F.lit(True))
     flip = F.col("_force").isNotNull() & (F.col("status") == "fetched")
-    updated = (
+    return (
         frontier.join(keys, "url", "left")
         .withColumn(
             "recrawl_age",
@@ -99,4 +89,3 @@ def force_recrawl(
         )
         .drop("_force")
     )
-    return updated, cuckoo

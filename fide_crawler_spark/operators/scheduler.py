@@ -37,15 +37,12 @@ from fide_crawler_spark.operators.parse import fetch_parse_stage
 from fide_crawler_spark.operators.rank import dequeue_rank
 from fide_crawler_spark.operators.urlseen import (
     PartitionedBloom,
-    PartitionedCuckoo,
     build_bloom,
     filter_unseen,
-    update_cuckoo,
 )
 from fide_crawler_spark.sources.snapshot import SnapshotTable
 
 BLOOM_STATE = "urlseen-bloom.bin"
-CUCKOO_STATE = "urlseen-cuckoo.bin"
 
 # SPARK_GRAFT_EPOCH_PROFILE=1 → per-phase wall times on stderr, one
 # line per epoch (the attribution tool for per-epoch fixed overhead —
@@ -79,13 +76,10 @@ class CrawlJob:
         spark: SparkSession,
         workdir: str,
         budget_per_host: int = 64,
-        n_salts: int = 8,
         fetch_mode: str = "synthetic",
         page_weight: int = 1,
         bloom_bits_per_part: int = 1 << 20,
         bloom_parts: int = 8,
-        enable_cuckoo: bool = False,
-        cuckoo_buckets_per_part: int = 1 << 13,
         respect_robots: bool = False,
         retain_snapshots: int | None = None,
         compact_docs_every: int | None = None,
@@ -93,13 +87,10 @@ class CrawlJob:
         self.spark = spark
         self.workdir = workdir
         self.budget = budget_per_host
-        self.n_salts = n_salts
         self.fetch_mode = fetch_mode
         self.page_weight = page_weight
         self.bloom_parts = bloom_parts
         self.bloom_bits = bloom_bits_per_part
-        self.enable_cuckoo = enable_cuckoo
-        self.cuckoo_buckets_per_part = cuckoo_buckets_per_part
         self.respect_robots = respect_robots
         # retention (Iceberg expire_snapshots): keep the newest K
         # snapshots of frontier+documents after each epoch commit.  At
@@ -149,11 +140,6 @@ class CrawlJob:
             robots = self.robots_tbl.read(frontier.sparkSession)
             frontier = robots_filter(frontier, robots, mark=True)
         bloom = PartitionedBloom(self.bloom_parts, self.bloom_bits)
-        state = {BLOOM_STATE: bloom.to_bytes()}
-        if self.enable_cuckoo:
-            state[CUCKOO_STATE] = PartitionedCuckoo(
-                self.bloom_parts, self.cuckoo_buckets_per_part
-            ).to_bytes()
 
         # single materialization: status counts derived from the written
         # files (finalize pattern), not from extra jobs over the input
@@ -177,7 +163,8 @@ class CrawlJob:
             }, None
 
         self.frontier_tbl.commit_partition_overwrite(
-            frontier, "period", state=state, finalize=finalize
+            frontier, "period", state={BLOOM_STATE: bloom.to_bytes()},
+            finalize=finalize,
         )
 
     def _robots_mode(self) -> str:
@@ -363,30 +350,6 @@ class CrawlJob:
             )
             bloom.merge(epoch_bloom)
 
-        state = {BLOOM_STATE: bloom.to_bytes()}
-        if self.enable_cuckoo:
-            # deletable URL-seen variant: maintained alongside the Bloom
-            # so force_recrawl can remove fingerprints (Bloom cannot).
-            # Sharded per url_hash % n_parts exactly like
-            # PartitionedBloom: this epoch's hashes are shuffled to
-            # their parts and inserted executor-side; an overflowing
-            # part is rebuilt bigger (again executor-side) from the
-            # fetched rows of the updated frontier.  The driver handles
-            # filter blobs only — no collect() of row-scale data.
-            ck = PartitionedCuckoo.from_bytes(self.frontier_tbl.state(CUCKOO_STATE))
-            epoch_hashes = fetched_keys.select(F.xxhash64("url").alias("url_hash"))
-            # rebuild source of truth = previously fetched (parent
-            # snapshot) ∪ this epoch's fetches — disjoint sets, since an
-            # epoch only dequeues pending rows
-            all_fetched = (
-                frontier.filter(F.col("status") == "fetched")
-                .select("url_hash")
-                .unionByName(epoch_hashes)
-            )
-            with _phase(prof, "cuckoo_update"):
-                ck = update_cuckoo(spark, epoch_hashes, all_fetched, ck)
-            state[CUCKOO_STATE] = ck.to_bytes()
-
         # pending after this epoch = previous pending − fetched (failed
         # rows stay pending); derived from metrics to save a recompute
         n_pending = self.pending_count() - n_fetched
@@ -404,7 +367,7 @@ class CrawlJob:
                     "total": int(m.get("total", -1)),
                     "blocked": int(m.get("blocked", 0)),
                 },
-                state=state,
+                state={BLOOM_STATE: bloom.to_bytes()},
                 lineage=lineage,
             )
         if (
@@ -474,21 +437,19 @@ class CrawlJob:
             .collect()
         ]
 
-    # -- forced recrawl (requires enable_cuckoo) ---------------------------
+    # -- forced recrawl ------------------------------------------------------
     def force_recrawl(self, urls: DataFrame) -> int:
-        """Re-admit specific URLs (north star: cuckoo-filter variant for
-        deletions): delete their fingerprints from the deletable
-        URL-seen filter, reset their frontier rows to pending with a
-        recrawl_age priority boost, and commit a metadata+data snapshot.
-        The Bloom filter is left as-is — it may report the URL as
-        maybe-seen, but the exact anti-join backstop checks against
-        frontier status, which this resets, so re-admission is correct
-        (Bloom false-positives only cost the backstop join)."""
-        assert self.enable_cuckoo, "force_recrawl requires enable_cuckoo=True"
+        """Re-admit specific URLs (``urls`` needs only a ``url`` column):
+        reset their fetched frontier rows to pending with a recrawl_age
+        priority boost, and commit a data snapshot.  Deletion is the
+        status flip alone — the Bloom filter is left as-is and may still
+        report the URL as maybe-seen, but the exact anti-join backstop
+        checks against ``status='fetched'``, which this resets, so the
+        URL is re-admitted (the stale bit only costs the backstop join).
+        """
         from fide_crawler_spark.operators.recrawl import force_recrawl as _fr
 
         frontier = self.frontier_tbl.read(self.spark)
-        ck = PartitionedCuckoo.from_bytes(self.frontier_tbl.state(CUCKOO_STATE))
         # touched-partition rewrite: only periods containing a forced
         # URL are re-committed (metadata-scale collect)
         touched = [
@@ -497,7 +458,7 @@ class CrawlJob:
             .select("period").distinct().collect()
         ]
         sub = frontier.filter(F.col("period").isin(touched))
-        updated, ck = _fr(sub, urls, ck)
+        updated = _fr(sub, urls)
         m = self.frontier_tbl.manifest()["metrics"]
         # only rows that actually flip fetched→pending change the count
         # (forcing an already-pending, blocked, or unknown URL is a no-op)
@@ -506,13 +467,11 @@ class CrawlJob:
             .join(urls.select("url").distinct(), "url", "left_semi")
             .count()
         )
-        state = self.frontier_tbl.carry_state()
-        state[CUCKOO_STATE] = ck.to_bytes()
         return self.frontier_tbl.commit_partition_overwrite(
             updated,
             "period",
             touched_values=touched,
             metrics={**m, "pending": int(m["pending"]) + n_forced,
                      "forced": n_forced},
-            state=state,
+            state=self.frontier_tbl.carry_state(),
         )

@@ -1,4 +1,4 @@
-"""URL-seen membership: partitioned Bloom filter + cuckoo variant.
+"""URL-seen membership: one partitioned Bloom filter + exact backstop.
 
 Reference analog: the SQLite MIN/MAX date-range probe that prevents
 refetching months inside the cached range
@@ -14,9 +14,11 @@ membership structure:
   order: Bloom pre-pass (no false negatives → definite-unseen rows skip
   the join entirely), then an exact ``left_anti`` join only for the
   maybe-seen minority (SURVEY G11/C3).
-* **CuckooFilter** — supports deletion (forced recrawl re-admits a URL
-  by deleting its fingerprint), which Bloom cannot.  Standard
-  4-slot-bucket cuckoo hashing with 16-bit fingerprints.
+* **Deletions** (forced recrawl) need no deletable filter: re-admission
+  flips the frontier row back to ``pending``.  The exact anti-join
+  checks ``status='fetched'`` rows, so a URL the Bloom still reports as
+  maybe-seen is admitted anyway; the stale bit only costs the backstop
+  join for that row (``recrawl.force_recrawl``).
 
 Hashing: two independent 32-bit halves of Spark's ``xxhash64(url)``
 (computed JVM-side, never in Python) combined Kirsch-Mitzenmacher
@@ -172,7 +174,7 @@ def filter_unseen(
     spark,
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: PartitionedBloom | None,
+    bloom: PartitionedBloom,
     hash_col: str = "url_hash",
 ) -> DataFrame:
     """Definitely-unseen (Bloom negative) rows bypass the join; only the
@@ -181,8 +183,6 @@ def filter_unseen(
     + ε, not |candidates|.
     """
     seen_keys = seen.select(hash_col).distinct()
-    if bloom is None:
-        return candidates.join(seen_keys, hash_col, "left_anti")
     probed = candidates.withColumn("_maybe", bloom_probe_col(spark, bloom, hash_col))
     sure_new = probed.filter(~F.col("_maybe")).drop("_maybe")
     checked = (
@@ -190,258 +190,3 @@ def filter_unseen(
         .join(seen_keys, hash_col, "left_anti")
     )
     return sure_new.unionByName(checked)
-
-
-class CuckooFilter:
-    """4-way bucketized cuckoo filter with 16-bit fingerprints.
-
-    Supports delete → used for forced-recrawl re-admission.  Driver-side
-    at sandbox scale; the scale path shards it exactly like
-    PartitionedBloom (one filter per ``url_hash % n_parts``).
-    """
-
-    MAGIC = b"CKF1"
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int = 1 << 16):
-        assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
-        self.n_buckets = n_buckets
-        self.table = np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)  # 0 = empty
-
-    def _fp_and_buckets(self, h: int) -> tuple[int, int, int]:
-        h = int(h) & 0xFFFFFFFFFFFFFFFF
-        fp = (h & 0xFFFF) or 1  # never 0 (0 marks empty)
-        b1 = (h >> 16) & (self.n_buckets - 1)
-        # partial-key cuckoo: alt bucket from fp hash (public construction,
-        # Fan et al. 2014)
-        b2 = (b1 ^ (fp * 0x5BD1E995)) & (self.n_buckets - 1)
-        return fp, b1, b2
-
-    def insert(self, h: int, _rng_state: int = 0x9E3779B9) -> bool:
-        fp, b1, b2 = self._fp_and_buckets(h)
-        for b in (b1, b2):
-            empties = np.flatnonzero(self.table[b] == 0)
-            if len(empties):
-                self.table[b, empties[0]] = fp
-                return True
-        # displace: deterministic pseudo-random walk (no wall-clock RNG)
-        b, state = b1, (int(h) ^ _rng_state) & 0xFFFFFFFF
-        for _ in range(self.MAX_KICKS):
-            state = (state * 1103515245 + 12345) & 0xFFFFFFFF
-            slot = state % self.SLOTS
-            fp, self.table[b, slot] = int(self.table[b, slot]), fp
-            b = (b ^ (fp * 0x5BD1E995)) & (self.n_buckets - 1)
-            empties = np.flatnonzero(self.table[b] == 0)
-            if len(empties):
-                self.table[b, empties[0]] = fp
-                return True
-        return False  # full — caller should resize
-
-    def contains(self, h: int) -> bool:
-        fp, b1, b2 = self._fp_and_buckets(h)
-        return bool((self.table[b1] == fp).any() or (self.table[b2] == fp).any())
-
-    def delete(self, h: int) -> bool:
-        fp, b1, b2 = self._fp_and_buckets(h)
-        for b in (b1, b2):
-            idx = np.flatnonzero(self.table[b] == fp)
-            if len(idx):
-                self.table[b, idx[0]] = 0
-                return True
-        return False
-
-    def to_bytes(self) -> bytes:
-        return self.MAGIC + np.array([self.n_buckets], dtype=np.uint64).tobytes() \
-            + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, blob: bytes) -> "CuckooFilter":
-        assert blob[:4] == cls.MAGIC
-        n_buckets = int(np.frombuffer(blob[4:12], dtype=np.uint64)[0])
-        cf = cls(n_buckets)
-        cf.table = np.frombuffer(blob[12:], dtype=np.uint16).reshape(
-            n_buckets, cls.SLOTS
-        ).copy()
-        return cf
-
-
-class PartitionedCuckoo:
-    """Sharded deletable URL-seen filter: one CuckooFilter per
-    ``url_hash % n_parts``, mirroring PartitionedBloom's layout so the
-    two structures stay co-partitioned with the frontier.
-
-    The driver only ever holds serialized part blobs; inserts run
-    executor-side via :func:`update_cuckoo` (hashes are shuffled by
-    part id — total driver traffic = the filter bytes, never the
-    hashes).  Parts resize independently, so one hot shard doubling
-    does not rewrite the other ``n_parts − 1`` tables.
-    """
-
-    MAGIC = b"PCK1"
-
-    def __init__(self, n_parts: int = 8, n_buckets_per_part: int = 1 << 13):
-        assert n_parts & (n_parts - 1) == 0, "n_parts must be a power of 2"
-        self.n_parts = n_parts
-        self.parts = [CuckooFilter(n_buckets_per_part) for _ in range(n_parts)]
-
-    def _pid(self, h: int) -> int:
-        return (int(h) & 0xFFFFFFFFFFFFFFFF) % self.n_parts
-
-    # driver-side single-key ops (small sets: forced-recrawl deletes,
-    # tests); bulk inserts go through update_cuckoo.  NOTE: insert() is
-    # a test/bootstrap convenience ONLY — update_cuckoo rebuilds an
-    # overflowed part solely from its ``all_hashes`` source of truth,
-    # so any fingerprint inserted here that is absent from all_hashes
-    # is dropped from that part on overflow.  Production mutations must
-    # all flow through update_cuckoo so state and source of truth agree.
-    def insert(self, h: int) -> bool:
-        return self.parts[self._pid(h)].insert(h)
-
-    def contains(self, h: int) -> bool:
-        return self.parts[self._pid(h)].contains(h)
-
-    def delete(self, h: int) -> bool:
-        return self.parts[self._pid(h)].delete(h)
-
-    def to_bytes(self) -> bytes:
-        # parts resize independently → store a length-prefixed blob per
-        # part rather than assuming uniform table sizes
-        blobs = [p.to_bytes() for p in self.parts]
-        header = self.MAGIC + np.array([self.n_parts], dtype=np.uint64).tobytes()
-        lens = np.array([len(b) for b in blobs], dtype=np.uint64).tobytes()
-        return header + lens + b"".join(blobs)
-
-    @classmethod
-    def from_bytes(cls, blob: bytes) -> "PartitionedCuckoo":
-        assert blob[:4] == cls.MAGIC, "bad partitioned-cuckoo blob"
-        n_parts = int(np.frombuffer(blob[4:12], dtype=np.uint64)[0])
-        lens = np.frombuffer(blob[12:12 + 8 * n_parts], dtype=np.uint64)
-        pc = cls.__new__(cls)
-        pc.n_parts = n_parts
-        pc.parts = []
-        off = 12 + 8 * n_parts
-        for ln in lens:
-            pc.parts.append(CuckooFilter.from_bytes(blob[off:off + int(ln)]))
-            off += int(ln)
-        return pc
-
-    @classmethod
-    def part_from_bytes(cls, blob: bytes, pid: int) -> CuckooFilter:
-        """Deserialize ONE shard from a serialized PartitionedCuckoo —
-        executor tasks own a few pids and must not materialize all
-        n_parts tables (that would defeat the per-task memory bound the
-        sharding provides)."""
-        assert blob[:4] == cls.MAGIC, "bad partitioned-cuckoo blob"
-        n_parts = int(np.frombuffer(blob[4:12], dtype=np.uint64)[0])
-        lens = np.frombuffer(blob[12:12 + 8 * n_parts], dtype=np.uint64)
-        off = 12 + 8 * n_parts + int(lens[:pid].sum())
-        return CuckooFilter.from_bytes(blob[off:off + int(lens[pid])])
-
-
-def _grow_part_with(hashes: np.ndarray, start_buckets: int) -> CuckooFilter:
-    """Build one part from its full hash set, doubling until it fits."""
-    n_buckets = max(start_buckets, 2)
-    while True:
-        cf = CuckooFilter(n_buckets)
-        if all(cf.insert(int(h)) for h in hashes):
-            return cf
-        n_buckets *= 2
-
-
-def update_cuckoo(
-    spark,
-    new_hashes: DataFrame,
-    all_hashes: DataFrame,
-    ck: PartitionedCuckoo,
-    hash_col: str = "url_hash",
-) -> PartitionedCuckoo:
-    """Distributed delta-insert into the sharded cuckoo filter.
-
-    ``new_hashes`` (this epoch's fetched url_hash rows) are shuffled by
-    part id; each task inserts into its own part(s) of the broadcast
-    filter and ships back only the mutated part blobs — the exact
-    protocol of :func:`build_bloom`.  A part that overflows is rebuilt
-    bigger in a second pass from ``all_hashes`` (the source of truth,
-    e.g. every fetched row of the frontier) — again executor-side,
-    touching only the overflowing part ids: a task holds one part's
-    full hash set (|fetched| / n_parts — size n_parts so this fits),
-    never the whole seen set, and the driver never collects a hash.
-    """
-    n_parts = ck.n_parts
-    blob_bc = spark.sparkContext.broadcast(ck.to_bytes())
-    part_of = F.pmod(F.col(hash_col).cast("long"), F.lit(n_parts))
-
-    def insert_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local: dict[int, CuckooFilter] = {}
-        failed: set[int] = set()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            hashes = pdf[hash_col].to_numpy().astype(np.uint64)
-            pids = (hashes % np.uint64(n_parts)).astype(np.int64)
-            for pid in np.unique(pids):
-                pid = int(pid)
-                if pid in failed:
-                    continue
-                if pid not in local:
-                    # slice ONLY this shard out of the broadcast blob
-                    local[pid] = PartitionedCuckoo.part_from_bytes(
-                        blob_bc.value, pid
-                    )
-                cf = local[pid]
-                for h in hashes[pids == pid]:
-                    if not cf.insert(int(h)):
-                        # a failed insert evicts a victim mid-kick →
-                        # this part's state is untrustworthy; flag for
-                        # the rebuild pass
-                        failed.add(pid)
-                        break
-        for pid, cf in local.items():
-            ok = pid not in failed
-            yield pd.DataFrame(
-                {"part": [pid], "ok": [ok],
-                 "blob": [cf.to_bytes() if ok else b""]}
-            )
-
-    rows = (
-        new_hashes.select(F.col(hash_col).cast("long").alias(hash_col))
-        .repartition(n_parts, part_of)
-        .mapInPandas(insert_parts, schema="part int, ok boolean, blob binary")
-        .collect()
-    )
-
-    out = PartitionedCuckoo.from_bytes(ck.to_bytes())  # copy untouched parts
-    overflowed = []
-    for r in rows:
-        if r["ok"]:
-            out.parts[int(r["part"])] = CuckooFilter.from_bytes(bytes(r["blob"]))
-        else:
-            overflowed.append(int(r["part"]))
-
-    if overflowed:
-        start_sizes = {pid: ck.parts[pid].n_buckets * 2 for pid in overflowed}
-
-        def rebuild_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc: dict[int, list[np.ndarray]] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                hashes = pdf[hash_col].to_numpy().astype(np.uint64)
-                pids = (hashes % np.uint64(n_parts)).astype(np.int64)
-                for pid in np.unique(pids):
-                    acc.setdefault(int(pid), []).append(hashes[pids == pid])
-            for pid, chunks in acc.items():
-                cf = _grow_part_with(np.concatenate(chunks), start_sizes[pid])
-                yield pd.DataFrame({"part": [pid], "blob": [cf.to_bytes()]})
-
-        rebuilt = (
-            all_hashes.select(F.col(hash_col).cast("long").alias(hash_col))
-            .filter(part_of.isin(overflowed))
-            .repartition(len(overflowed), part_of)
-            .mapInPandas(rebuild_parts, schema="part int, blob binary")
-            .collect()
-        )
-        for r in rebuilt:
-            out.parts[int(r["part"])] = CuckooFilter.from_bytes(bytes(r["blob"]))
-    return out

@@ -1274,7 +1274,7 @@ def q35_crawl_to_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = seed_frontier_rows(["1503014", "2020009"], "2023-01-01", 4)
     wd = tempfile.mkdtemp(prefix="q35_crawl_")
-    job = CrawlJob(spark, wd, budget_per_host=4, n_salts=2)
+    job = CrawlJob(spark, wd, budget_per_host=4)
     job.init(spark.createDataFrame(rows))
     job.run()
     docs = job.read_documents().select("doc_id", "spans")

@@ -64,9 +64,8 @@ def fetch_stage(
     """frontier rows (must contain ``url``) → (url, status, page).
 
     One Arrow round-trip per partition; page bodies never touch the
-    driver.  At cluster scale the fetch partitioning is whatever the
-    politeness stage produced (per-host salted groups), so connection
-    reuse per host falls out naturally.
+    driver.  The fetch partitioning is whatever the caller hands in
+    (the scheduler rebalances each dequeued batch on ``url``).
     """
     if mode == "synthetic":
         fetch = lambda urls: _synthetic_fetch_batch(urls, weight)  # noqa: E731

@@ -46,7 +46,7 @@ def main() -> None:
     spark = get_spark(f"crawl_bench_{args.cores}", cores=args.cores)
     # Every shuffle in the epoch path is explicitly partitioned (range
     # shuffle pinned by persist in dequeue_rank, fetch repartition(n),
-    # salted politeness) — AQE cannot improve those plans, and its
+    # Bloom build by sub-filter id) — AQE cannot improve those plans, and its
     # per-query re-optimization rounds cost ~0.5-1 s of driver latency
     # per epoch (interleaved A/B, identical output CRC).  AQE stays ON
     # for the analytics tier (session.py default) where it earns it.

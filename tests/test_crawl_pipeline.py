@@ -9,14 +9,13 @@ resume from a snapshot after a kill.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fide_crawler_spark.fixtures import seed_frontier_rows
+from fide_crawler_spark.operators.frontier import priority_order
 from fide_crawler_spark.operators.parse import reassemble_spans, explode_spans
-from fide_crawler_spark.operators.politeness import (
-    politeness_cap,
-    politeness_cap_naive,
-)
+from fide_crawler_spark.operators.rank import dequeue_rank
 from fide_crawler_spark.operators.scheduler import CrawlJob
 from fide_crawler_spark.oracle.sequential import run_oracle
 
@@ -37,7 +36,7 @@ def oracle(frontier_rows):
 @pytest.fixture(scope="module")
 def job(spark, frontier_rows, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("crawl"))
-    j = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=4)
+    j = CrawlJob(spark, wd, budget_per_host=BUDGET)
     j.init(spark.createDataFrame(frontier_rows))
     j.run()
     return j
@@ -109,12 +108,12 @@ def test_resume_identical_to_uninterrupted(spark, frontier_rows, oracle, tmp_pat
     fresh CrawlJob on the same workdir, run to completion → identical
     crawl order + spans."""
     wd = str(tmp_path / "resumable")
-    j1 = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=4)
+    j1 = CrawlJob(spark, wd, budget_per_host=BUDGET)
     j1.init(spark.createDataFrame(frontier_rows))
     j1.run_epoch()
     del j1
 
-    j2 = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=4)
+    j2 = CrawlJob(spark, wd, budget_per_host=BUDGET)
     assert j2.epoch() == 0  # resumed from snapshot, not restarted
     j2.run()
     assert j2.crawl_order() == oracle.crawl_order
@@ -130,7 +129,7 @@ def test_shuffle_partition_invariance(spark, frontier_rows, oracle, tmp_path):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        j = CrawlJob(spark, str(tmp_path / "narrow"), budget_per_host=BUDGET, n_salts=2)
+        j = CrawlJob(spark, str(tmp_path / "narrow"), budget_per_host=BUDGET)
         j.init(spark.createDataFrame(frontier_rows))
         j.run()
         assert j.crawl_order() == oracle.crawl_order
@@ -139,11 +138,25 @@ def test_shuffle_partition_invariance(spark, frontier_rows, oracle, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def politeness_cap_naive(frontier: DataFrame, budget_per_host: int) -> DataFrame:
+    """Single-window reference form of the per-host cap (skew-prone: a
+    hot host funnels through one window partition)."""
+    w = Window.partitionBy("host").orderBy(*priority_order())
+    return (
+        frontier.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= budget_per_host)
+        .drop("_rn")
+    )
+
+
 def test_politeness_two_phase_equals_naive(spark, frontier_rows):
+    """The scheduler's fused two-pass cap keeps exactly the naive
+    window's rows on the real priority tuple, ranked in priority order."""
     df = spark.createDataFrame(frontier_rows)
-    fast = politeness_cap(df, BUDGET, n_salts=4).select("url")
-    naive = politeness_cap_naive(df, BUDGET).select("url")
-    assert {r["url"] for r in fast.collect()} == {r["url"] for r in naive.collect()}
+    fused = dequeue_rank(df, "host", priority_order(), BUDGET)
+    got = [(r["url"], r["rank"]) for r in fused.orderBy("rank").collect()]
+    naive = politeness_cap_naive(df, BUDGET).orderBy(*priority_order())
+    assert got == [(r["url"], i) for i, r in enumerate(naive.collect(), 1)]
 
 
 def test_span_explode_reassemble_roundtrip(spark, job):
@@ -162,7 +175,7 @@ def test_flaky_fetch_retries_until_complete(spark, frontier_rows, oracle, tmp_pa
     import zlib
 
     wd = str(tmp_path / "flaky")
-    j = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=2, fetch_mode="flaky")
+    j = CrawlJob(spark, wd, budget_per_host=BUDGET, fetch_mode="flaky")
     j.init(spark.createDataFrame(frontier_rows))
     stats = j.run()
     assert any(s.get("failed", 0) > 0 for s in stats), "no failures injected?"
@@ -183,7 +196,7 @@ def test_duplicate_admission_not_refetched(spark, frontier_rows, tmp_path):
     discovered-link / re-seed case) — they must be rejected by the Bloom
     pre-pass + anti-join, not fetched twice."""
     wd = str(tmp_path / "dupadmit")
-    j = CrawlJob(spark, wd, budget_per_host=BUDGET, n_salts=2)
+    j = CrawlJob(spark, wd, budget_per_host=BUDGET)
     j.init(spark.createDataFrame(frontier_rows))
     j.run()
     n_docs_before = j.docs_tbl.read(spark).count()
@@ -216,13 +229,12 @@ def test_retention_bounds_history_and_preserves_output(
     counts stay bounded, and append-chain doc file sets referenced by
     the surviving manifest are untouched."""
     base = CrawlJob(
-        spark, str(tmp_path / "unbounded"), budget_per_host=BUDGET, n_salts=2
+        spark, str(tmp_path / "unbounded"), budget_per_host=BUDGET
     )
     base.init(spark.createDataFrame(frontier_rows))
     base.run()
     j = CrawlJob(
-        spark, str(tmp_path / "retained"), budget_per_host=BUDGET,
-        n_salts=2, retain_snapshots=2,
+        spark, str(tmp_path / "retained"), budget_per_host=BUDGET, retain_snapshots=2,
     )
     j.init(spark.createDataFrame(frontier_rows))
     j.run()
@@ -247,18 +259,17 @@ def test_retention_resume_after_kill(spark, frontier_rows, tmp_path):
     history)."""
     wd = str(tmp_path / "ret_resume")
     j1 = CrawlJob(
-        spark, wd, budget_per_host=BUDGET, n_salts=2, retain_snapshots=2
+        spark, wd, budget_per_host=BUDGET, retain_snapshots=2
     )
     j1.init(spark.createDataFrame(frontier_rows))
     j1.run_epoch()
     j1.run_epoch()  # "killed" here: a fresh job object resumes
     j2 = CrawlJob(
-        spark, wd, budget_per_host=BUDGET, n_salts=2, retain_snapshots=2
+        spark, wd, budget_per_host=BUDGET, retain_snapshots=2
     )
     j2.run()
     ref = CrawlJob(
-        spark, str(tmp_path / "ret_ref"), budget_per_host=BUDGET,
-        n_salts=2, retain_snapshots=2,
+        spark, str(tmp_path / "ret_ref"), budget_per_host=BUDGET, retain_snapshots=2,
     )
     ref.init(spark.createDataFrame(frontier_rows))
     ref.run()
@@ -273,12 +284,12 @@ def test_compaction_cycle_reclaims_doc_filesets(spark, frontier_rows, tmp_path):
     import os
 
     base = CrawlJob(
-        spark, str(tmp_path / "cc_base"), budget_per_host=BUDGET, n_salts=2
+        spark, str(tmp_path / "cc_base"), budget_per_host=BUDGET
     )
     base.init(spark.createDataFrame(frontier_rows))
     base.run()
     j = CrawlJob(
-        spark, str(tmp_path / "cc_ret"), budget_per_host=BUDGET, n_salts=2,
+        spark, str(tmp_path / "cc_ret"), budget_per_host=BUDGET,
         retain_snapshots=2, compact_docs_every=2,
     )
     j.init(spark.createDataFrame(frontier_rows))

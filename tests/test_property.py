@@ -8,7 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from fide_crawler_spark.fixtures import parse_page, render_page, synth_spans
-from fide_crawler_spark.operators.urlseen import CuckooFilter, PartitionedBloom
+from fide_crawler_spark.operators.urlseen import PartitionedBloom
 
 hashes = st.lists(
     st.integers(min_value=0, max_value=2**64 - 1), min_size=0, max_size=300
@@ -32,15 +32,6 @@ def test_bloom_serialization_preserves_membership(hs):
     bf.add_hashes(arr)
     bf2 = PartitionedBloom.from_bytes(bf.to_bytes())
     assert (bf.might_contain(arr) == bf2.might_contain(arr)).all()
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=2**63 - 1),
-                min_size=0, max_size=200, unique=True))
-def test_cuckoo_membership_after_inserts(hs):
-    cf = CuckooFilter(1 << 10)
-    inserted = [h for h in hs if cf.insert(h)]
-    assert all(cf.contains(h) for h in inserted)
 
 
 @settings(max_examples=30, deadline=None)

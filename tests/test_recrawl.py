@@ -12,7 +12,6 @@ from fide_crawler_spark.operators.recrawl import (
     force_recrawl,
     gap_analysis,
 )
-from fide_crawler_spark.operators.urlseen import CuckooFilter
 
 
 def oracle_months(start: str, end: str, db_min: str | None, db_max: str | None):
@@ -90,44 +89,54 @@ def test_force_recrawl_readmits(spark):
         [("u1", 11, "fetched", 0), ("u2", 22, "fetched", 0), ("u3", 33, "pending", 0)],
         "url string, url_hash long, status string, recrawl_age int",
     )
-    cf = CuckooFilter(1 << 8)
-    for h in (11, 22, 33):
-        cf.insert(h)
-    urls = frontier.filter(F.col("url") == "u2").select("url", "url_hash")
-    updated, cf = force_recrawl(frontier, urls, cf)
-    rows = {r["url"]: r for r in updated.collect()}
+    urls = spark.createDataFrame([("u2",)], "url string")
+    rows = {r["url"]: r for r in force_recrawl(frontier, urls).collect()}
     assert rows["u2"]["status"] == "pending" and rows["u2"]["recrawl_age"] == 1
-    assert rows["u1"]["status"] == "fetched"
-    assert not cf.contains(22) and cf.contains(11) and cf.contains(33)
+    assert rows["u1"]["status"] == "fetched" and rows["u1"]["recrawl_age"] == 0
+    assert rows["u3"]["status"] == "pending" and rows["u3"]["recrawl_age"] == 0
 
 
 def test_scheduler_force_recrawl_end_to_end(spark, tmp_path):
-    """Full loop: crawl all, force-recrawl a subset via the cuckoo
-    variant, re-run → re-fetched docs land in a later epoch with
-    identical spans (deterministic fetcher)."""
+    """Full loop on a default CrawlJob: crawl all, force-recrawl one URL,
+    re-run → the re-fetched doc lands in a later epoch with identical
+    spans.  The committed Bloom still says maybe-seen for that URL, so
+    re-admission rests on the frontier status flip + the exact
+    anti-join backstop alone."""
+    import numpy as np
+
     from fide_crawler_spark.fixtures import seed_frontier_rows
-    from fide_crawler_spark.operators.scheduler import CrawlJob
+    from fide_crawler_spark.operators.scheduler import BLOOM_STATE, CrawlJob
+    from fide_crawler_spark.operators.urlseen import PartitionedBloom
 
     rows = seed_frontier_rows(["7700077"], "2023-01-01", 4)
+    url = rows[0]["url"]
     wd = str(tmp_path / "forced")
-    j = CrawlJob(spark, wd, budget_per_host=8, n_salts=2, enable_cuckoo=True)
+    j = CrawlJob(spark, wd, budget_per_host=8)
     j.init(spark.createDataFrame(rows))
     j.run()
     docs_before = {r["doc_id"]: r["epoch"] for r in
                    j.read_documents().select("doc_id", "epoch").collect()}
 
-    target = spark.createDataFrame(
-        [(rows[0]["url"],)], "url string"
-    ).select("url", F.xxhash64("url").alias("url_hash"))
-    j.force_recrawl(target)
+    j.force_recrawl(spark.createDataFrame([(url,)], "url string"))
     assert j.pending_count() == 1
+    assert j.frontier_tbl.manifest()["state_files"] == [BLOOM_STATE]
+    (h,) = [
+        r["url_hash"] for r in j.frontier_tbl.read(spark)
+        .filter(F.col("url") == url).select("url_hash").collect()
+    ]
+    bloom = PartitionedBloom.from_bytes(j.frontier_tbl.state(BLOOM_STATE))
+    assert bloom.might_contain(np.array([h], dtype=np.int64).astype(np.uint64))[0]
     j.run()
+    assert j.frontier_tbl.manifest()["state_files"] == [BLOOM_STATE]
 
-    docs = j.docs_tbl.read(spark).filter(F.col("doc_id") == rows[0]["url"])
-    epochs = sorted(r["epoch"] for r in docs.select("epoch").collect())
-    assert len(epochs) == 2 and epochs[1] > docs_before[rows[0]["url"]]
-    # read_documents dedups to one row per doc; spans unchanged
-    final = j.read_documents().filter(F.col("doc_id") == rows[0]["url"]).count()
+    docs = j.docs_tbl.read(spark).filter(F.col("doc_id") == url)
+    copies = sorted(
+        (r["epoch"], r["spans"]) for r in docs.select("epoch", "spans").collect()
+    )
+    assert len(copies) == 2 and copies[1][0] > docs_before[url]
+    assert copies[0][1] == copies[1][1]
+    # read_documents dedups to one row per doc
+    final = j.read_documents().filter(F.col("doc_id") == url).count()
     assert final == 1
 
 
@@ -139,7 +148,7 @@ def test_force_recrawl_noop_urls_dont_corrupt_pending(spark, tmp_path):
 
     rows = seed_frontier_rows(["9900099"], "2023-01-01", 3)
     wd = str(tmp_path / "noopforce")
-    j = CrawlJob(spark, wd, budget_per_host=8, n_salts=2, enable_cuckoo=True)
+    j = CrawlJob(spark, wd, budget_per_host=8)
     j.init(spark.createDataFrame(rows))
     j.run()
     assert j.pending_count() == 0
@@ -147,43 +156,13 @@ def test_force_recrawl_noop_urls_dont_corrupt_pending(spark, tmp_path):
     targets = spark.createDataFrame(
         [("https://nowhere/x",), (rows[0]["url"],), (rows[0]["url"],)],
         "url string",
-    ).select("url", F.xxhash64("url").alias("url_hash"))
+    )
     j.force_recrawl(targets)
     assert j.pending_count() == 1  # only the genuine flip counts
     j.force_recrawl(targets)       # second force: row already pending
     assert j.pending_count() == 1
     j.run()
     assert j.pending_count() == 0
-
-
-def test_cuckoo_overflow_rebuilds(spark, tmp_path):
-    """Filling the cuckoo filter mid-crawl triggers a rebuild from the
-    frontier's fetched set instead of silently dropping fingerprints."""
-    from fide_crawler_spark.fixtures import seed_frontier_rows
-    from fide_crawler_spark.operators import scheduler as S
-    from fide_crawler_spark.operators.scheduler import CrawlJob
-    from fide_crawler_spark.operators.urlseen import PartitionedCuckoo
-
-    rows = seed_frontier_rows([str(8800000 + i) for i in range(20)], "2023-01-01", 4)
-    wd = str(tmp_path / "tinycuckoo")
-    j = CrawlJob(spark, wd, budget_per_host=1000, n_salts=2, enable_cuckoo=True)
-    j.init(spark.createDataFrame(rows))
-    # shrink the persisted parts to 2 buckets × 4 slots each
-    # (capacity 2×8 = 16 < 80) so the executor-side rebuild must fire
-    tiny = PartitionedCuckoo(2, 2)
-    snap = j.frontier_tbl.latest()
-    import os
-    with open(os.path.join(j.frontier_tbl._dir(snap), "state", S.CUCKOO_STATE), "wb") as f:
-        f.write(tiny.to_bytes())
-    j.run()
-    ck = PartitionedCuckoo.from_bytes(j.frontier_tbl.state(S.CUCKOO_STATE))
-    assert max(p.n_buckets for p in ck.parts) > 2, "no part grew"
-    fetched = j.frontier_tbl.read(spark).filter(F.col("status") == "fetched")
-    missing = [
-        r["url_hash"] for r in fetched.select("url_hash").collect()
-        if not ck.contains(int(r["url_hash"]))
-    ]
-    assert not missing, f"{len(missing)} fetched URLs missing from rebuilt filter"
 
 
 def test_force_recrawl_never_readmits_blocked(spark):
@@ -193,12 +172,8 @@ def test_force_recrawl_never_readmits_blocked(spark):
         [("b1", 1, "blocked", 0), ("f1", 2, "fetched", 0), ("p1", 3, "pending", 0)],
         "url string, url_hash long, status string, recrawl_age int",
     )
-    cf = CuckooFilter(1 << 8)
-    for h in (1, 2, 3):
-        cf.insert(h)
-    urls = frontier.select("url", "url_hash")  # force EVERYTHING
-    updated, cf = force_recrawl(frontier, urls, cf)
-    rows = {r["url"]: r for r in updated.collect()}
+    urls = frontier.select("url")  # force EVERYTHING
+    rows = {r["url"]: r for r in force_recrawl(frontier, urls).collect()}
     assert rows["b1"]["status"] == "blocked" and rows["b1"]["recrawl_age"] == 0
     assert rows["f1"]["status"] == "pending" and rows["f1"]["recrawl_age"] == 1
     assert rows["p1"]["status"] == "pending" and rows["p1"]["recrawl_age"] == 0

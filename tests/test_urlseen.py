@@ -1,10 +1,10 @@
-"""Unit tests for the Bloom / cuckoo URL-seen structures (no Spark)."""
+"""Unit tests for the Bloom URL-seen structure (no Spark)."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from fide_crawler_spark.operators.urlseen import CuckooFilter, PartitionedBloom
+from fide_crawler_spark.operators.urlseen import PartitionedBloom
 
 
 def _hashes(n: int, seed: int) -> np.ndarray:
@@ -38,89 +38,3 @@ def test_bloom_roundtrip_and_merge():
     a2.merge(b)
     assert a2.might_contain(hb).all()
 
-
-def test_cuckoo_insert_contains_delete():
-    cf = CuckooFilter(n_buckets=1 << 12)
-    hs = [int(h) for h in _hashes(2000, 6)]
-    for h in hs:
-        assert cf.insert(h)
-    assert all(cf.contains(h) for h in hs)
-    for h in hs[:500]:
-        assert cf.delete(h)
-    # deleted fingerprints gone (modulo fp collisions from remaining items)
-    still = sum(cf.contains(h) for h in hs[:500])
-    assert still < 50
-    assert all(cf.contains(h) for h in hs[500:])
-
-
-def test_cuckoo_roundtrip():
-    cf = CuckooFilter(n_buckets=1 << 10)
-    hs = [int(h) for h in _hashes(500, 7)]
-    for h in hs:
-        cf.insert(h)
-    cf2 = CuckooFilter.from_bytes(cf.to_bytes())
-    assert all(cf2.contains(h) for h in hs)
-
-
-def test_partitioned_cuckoo_roundtrip_and_delete():
-    from fide_crawler_spark.operators.urlseen import PartitionedCuckoo
-
-    pc = PartitionedCuckoo(4, 1 << 8)
-    hs = [int(h) for h in _hashes(1500, 8)]
-    for h in hs:
-        assert pc.insert(h)
-    pc2 = PartitionedCuckoo.from_bytes(pc.to_bytes())
-    assert all(pc2.contains(h) for h in hs)
-    for h in hs[:200]:
-        assert pc2.delete(h)
-    assert sum(pc2.contains(h) for h in hs[:200]) < 20
-
-
-def test_partitioned_cuckoo_heterogeneous_part_sizes():
-    """Parts resize independently → serialization must carry per-part
-    sizes, not assume a uniform table."""
-    from fide_crawler_spark.operators.urlseen import (
-        PartitionedCuckoo,
-        _grow_part_with,
-    )
-
-    pc = PartitionedCuckoo(2, 2)
-    hs = _hashes(300, 9)
-    pids = hs % np.uint64(2)
-    pc.parts[0] = _grow_part_with(hs[pids == 0], 2)
-    assert pc.parts[0].n_buckets != pc.parts[1].n_buckets
-    pc2 = PartitionedCuckoo.from_bytes(pc.to_bytes())
-    assert [p.n_buckets for p in pc2.parts] == [p.n_buckets for p in pc.parts]
-    assert all(pc2.contains(int(h)) for h in hs[pids == 0])
-
-
-def test_update_cuckoo_distributed(spark):
-    """Executor-side delta insert: driver ships/receives blobs only."""
-    from fide_crawler_spark.operators.urlseen import (
-        PartitionedCuckoo,
-        update_cuckoo,
-    )
-
-    hs = [int(h) for h in _hashes(3000, 10).astype(np.int64)]
-    df = spark.createDataFrame([(h,) for h in hs], "url_hash long")
-    ck = update_cuckoo(spark, df, df, PartitionedCuckoo(4, 1 << 10))
-    assert all(ck.contains(h) for h in hs)
-    assert not ck.contains(123456789)
-
-
-def test_update_cuckoo_overflow_rebuilds_only_hot_part(spark):
-    """A part that overflows is rebuilt bigger from all_hashes; the
-    other parts keep their original size."""
-    from fide_crawler_spark.operators.urlseen import (
-        PartitionedCuckoo,
-        update_cuckoo,
-    )
-
-    # all hashes in part 0 of 4 (multiples of 4) — part 0 must overflow
-    hs = [4 * i for i in range(1, 400)]
-    df = spark.createDataFrame([(h,) for h in hs], "url_hash long")
-    base = PartitionedCuckoo(4, 2)  # capacity 8 per part
-    ck = update_cuckoo(spark, df, df, base)
-    assert ck.parts[0].n_buckets > 2
-    assert all(p.n_buckets == 2 for p in ck.parts[1:])
-    assert all(ck.contains(h) for h in hs)
