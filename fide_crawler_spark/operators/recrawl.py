@@ -14,8 +14,9 @@ Reference semantics (``data_processing/data_fetching_processing.py:207-245``):
 Forced recrawl (beyond the reference): a URL is re-admitted by
 resetting its frontier row to pending with a bumped ``recrawl_age`` so
 the priority queue favors it.  The URL-seen Bloom filter is not touched:
-admission's exact anti-join backstop checks frontier status, so the
-status flip alone is the deletion.
+the epoch dequeues pending rows without consulting it, and admission
+anti-joins on ``url`` against the frontier, so the status flip alone is
+the deletion.
 """
 
 from __future__ import annotations

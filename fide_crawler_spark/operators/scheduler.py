@@ -7,7 +7,10 @@ Reference behavior being reproduced
   the top-priority frontier rows (player seed order, month ascending —
   the priority columns make the reference's order a sort key);
 * cache-aware gap analysis — months already fetched are never refetched
-  (``:216-234``) → Bloom pre-pass + exact anti-join vs the URL-seen set;
+  (``:216-234``) → the URL-seen test at admission (exact anti-join on
+  ``url``, ``crawl_stream.admit_seeds``), so the frontier holds each
+  URL once and an epoch dequeues pending rows as they are; the epoch
+  adds its fetched URLs to the checkpointed Bloom state;
 * swallow-and-skip errors (``:195-196``) + ``@retry``
   (``old_scripts/fide-games-scraper-public.py:48``) → failed rows stay
   pending with ``retry_count + 1``;
@@ -35,11 +38,7 @@ from pyspark.sql import functions as F
 from fide_crawler_spark.operators.frontier import priority_order
 from fide_crawler_spark.operators.parse import fetch_parse_stage
 from fide_crawler_spark.operators.rank import dequeue_rank
-from fide_crawler_spark.operators.urlseen import (
-    PartitionedBloom,
-    build_bloom,
-    filter_unseen,
-)
+from fide_crawler_spark.operators.urlseen import PartitionedBloom, build_bloom
 from fide_crawler_spark.sources.snapshot import SnapshotTable
 
 BLOOM_STATE = "urlseen-bloom.bin"
@@ -120,11 +119,16 @@ class CrawlJob:
 
     # -- lifecycle ---------------------------------------------------------
     def init(self, frontier: DataFrame) -> None:
-        """Epoch -1 snapshot: full pending frontier + empty Bloom."""
+        """Epoch -1 snapshot: the frontier, one row per ``url``, + empty
+        Bloom."""
         if self.frontier_tbl.latest() is not None:
             return  # already initialized — resume instead
         if "url_hash" not in frontier.columns:
             frontier = frontier.withColumn("url_hash", F.xxhash64("url"))
+        # a duplicated seed would put two rows of one url in the
+        # frontier: both would be fetched, and their equal priority
+        # tuples would break dequeue_rank's total order
+        frontier = frontier.dropDuplicates(["url"])
         if self.respect_robots:
             # robots.txt cache (north rule): one fetch per distinct
             # host, rules snapshot-persisted, admission enforced by
@@ -143,10 +147,8 @@ class CrawlJob:
 
         # single materialization: status counts derived from the written
         # files (finalize pattern), not from extra jobs over the input
-        # plan.  'total' counts every non-blocked row — fetched rows in
-        # an imported frontier must keep total > pending so run_epoch's
-        # URL-seen skip proof ("pending == total ⇒ nothing fetched yet")
-        # stays sound.
+        # plan.  'total' counts every non-blocked row, fetched rows of
+        # an imported frontier included.
         def finalize(data_path: str):
             spark = frontier.sparkSession
             counts = {
@@ -183,46 +185,28 @@ class CrawlJob:
         t_epoch = time.time()
         e = self.epoch() + 1
         frontier = self.frontier_tbl.read(spark)
-        pending = frontier.filter(F.col("status") == "pending")
-
-        # URL-seen: Bloom pre-pass over fetched set, exact anti-join
-        # backstop.  Skipped while the seen set is provably empty (no
-        # successful fetch yet, per snapshot metrics).
         m = self.frontier_tbl.manifest()["metrics"]
-        bloom = PartitionedBloom.from_bytes(self.frontier_tbl.state(BLOOM_STATE))
-        if int(m.get("total", -1)) == int(m["pending"]):
-            candidates = pending
-        else:
-            seen = frontier.filter(F.col("status") == "fetched")
-            candidates = filter_unseen(spark, pending, seen, bloom)
 
         # fused dequeue: politeness budget per host + global crawl rank
         # in one sorted pass (operators/rank.py dequeue_rank — a
-        # windowed rank would serialize the batch into one task).
+        # windowed rank would serialize the batch into one task).  No
+        # URL-seen test here: admission ran it, and frontier rows are
+        # unique by url, so no pending row is also fetched.
         # _caches registers the operator's persisted sort layout so it
-        # is released at epoch end (it would leak one candidate-set-
-        # sized cache per epoch otherwise).
+        # is released at epoch end (it would leak one pending-set-sized
+        # cache per epoch otherwise).
         _caches: list = []
         _stats: dict = {}
-        # Persist the candidate set before ranking: dequeue_rank's
-        # range-boundary sample job and its shuffle map both scan the
-        # input, so without this the URL-seen chain (Bloom prepass +
-        # exact anti-join) runs TWICE per epoch — pure per-epoch
-        # overhead that does not shrink with executor count.  Disk-
-        # spillable, bounded by the pending set — the same order as the
-        # sorted layout dequeue_rank itself persists.
-        candidates = candidates.persist()
-        _caches.append(candidates)
         with _phase(prof, "dequeue"):
             batch = dequeue_rank(
-                candidates, "host", priority_order(), self.budget, "rank",
+                frontier.filter(F.col("status") == "pending"), "host",
+                priority_order(), self.budget, "rank",
                 caches=_caches, stats_out=_stats,
             ).persist()
         _caches.append(batch)
         try:
             return self._run_epoch_body(
-                spark, e, m, frontier, bloom, batch, _stats["n_survivors"],
-                prof,
+                spark, e, m, frontier, batch, _stats["n_survivors"], prof,
             )
         finally:
             for c in _caches:
@@ -232,7 +216,7 @@ class CrawlJob:
                 print(f"[epoch-profile] e={e} {prof}", file=sys.stderr)
 
     def _run_epoch_body(
-        self, spark, e, m, frontier, bloom, batch, n_batch, prof=None
+        self, spark, e, m, frontier, batch, n_batch, prof=None
     ) -> dict:
         # n_batch comes from the dequeue's own pass-1 statistics — no
         # extra count() job; the batch cache materializes lazily inside
@@ -341,9 +325,10 @@ class CrawlJob:
             .drop("_new_status")
         )
 
-        # Bloom maintenance: distributed partial build over this epoch's
-        # fetched hashes (from the committed files), OR-merged
+        # Bloom maintenance: JVM build over this epoch's fetched hashes
+        # (from the committed files), OR-merged into the committed filter
         with _phase(prof, "bloom_build"):
+            bloom = PartitionedBloom.from_bytes(self.frontier_tbl.state(BLOOM_STATE))
             epoch_bloom = build_bloom(
                 fetched_keys.select(F.xxhash64("url").alias("url_hash")),
                 "url_hash", self.bloom_parts, self.bloom_bits,
@@ -442,10 +427,12 @@ class CrawlJob:
         """Re-admit specific URLs (``urls`` needs only a ``url`` column):
         reset their fetched frontier rows to pending with a recrawl_age
         priority boost, and commit a data snapshot.  Deletion is the
-        status flip alone — the Bloom filter is left as-is and may still
-        report the URL as maybe-seen, but the exact anti-join backstop
-        checks against ``status='fetched'``, which this resets, so the
-        URL is re-admitted (the stale bit only costs the backstop join).
+        status flip alone: the epoch dequeues pending rows without a
+        URL-seen test, so the flipped row is fetched again.  The Bloom
+        filter is left as-is and still reports the URL as maybe-seen;
+        nothing on the crawl path probes it (admission's exact anti-join
+        on ``url`` rejects a re-discovery, the row being in the
+        frontier).
         """
         from fide_crawler_spark.operators.recrawl import force_recrawl as _fr
 

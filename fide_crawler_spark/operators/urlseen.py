@@ -3,22 +3,28 @@
 Reference analog: the SQLite MIN/MAX date-range probe that prevents
 refetching months inside the cached range
 (``data_processing/data_fetching_processing.py:216-234``) plus the
-``@st.cache`` memo (``:16``).  At 10^10-URL scale that becomes a
-membership structure:
+``@st.cache`` memo (``:16``).  The crawl runs that test once per
+discovered URL, at admission (``streaming/crawl_stream.admit_seeds``,
+Mercator's placement), as an exact anti-join on ``url`` against the
+frontier; frontier rows are then unique by ``url``, so an epoch never
+re-tests its pending rows.  At 10^10-URL scale the fetched side of that
+join grows without bound, which is what this membership structure over
+the FETCHED URLs is for:
 
-* **PartitionedBloom** — the frontier hash space is split into
-  ``n_parts`` sub-filters keyed by ``url_hash % n_parts``.  Each part is
-  built executor-side (``mapInPandas`` partial filters, OR-merged), so
-  no single filter needs to hold 10^10 elements; parts are persisted as
-  per-snapshot state files and co-partitioned with the frontier.  Probe
-  order: Bloom pre-pass (no false negatives → definite-unseen rows skip
-  the join entirely), then an exact ``left_anti`` join only for the
-  maybe-seen minority (SURVEY G11/C3).
+* **PartitionedBloom** — the hash space is split into ``n_parts``
+  sub-filters keyed by ``url_hash % n_parts``, so no single filter
+  needs to hold 10^10 elements; each epoch adds its fetched URLs and
+  the filter is persisted as snapshot state, committed atomically with
+  the frontier.  ``build_bloom`` is one JVM aggregate
+  (``bitmap_construct_agg`` over the k bit positions of each hash), so
+  the per-epoch build runs no Python.  ``filter_unseen`` is the
+  Bloom-pruned form of the test: Bloom pre-pass (no false negatives →
+  definite-unseen rows skip the join entirely), then an exact
+  ``left_anti`` join on ``url`` only for the maybe-seen minority
+  (SURVEY G11/C3).
 * **Deletions** (forced recrawl) need no deletable filter: re-admission
-  flips the frontier row back to ``pending``.  The exact anti-join
-  checks ``status='fetched'`` rows, so a URL the Bloom still reports as
-  maybe-seen is admitted anyway; the stale bit only costs the backstop
-  join for that row (``recrawl.force_recrawl``).
+  flips the frontier row back to ``pending``, and the crawl dequeues
+  pending rows without consulting the Bloom (``recrawl.force_recrawl``).
 
 Hashing: two independent 32-bit halves of Spark's ``xxhash64(url)``
 (computed JVM-side, never in Python) combined Kirsch-Mitzenmacher
@@ -26,8 +32,6 @@ style: ``idx_i = (h1 + i*h2) mod m``.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -54,7 +58,7 @@ class PartitionedBloom:
         self.k = k
         self.parts = [np.zeros(bits_per_part // 8, dtype=np.uint8) for _ in range(n_parts)]
 
-    # -- core ops (vectorized numpy; called from Arrow batches) -----------
+    # -- core ops (vectorized numpy; the probe runs in Arrow batches) -----
     def _positions(self, hashes: np.ndarray) -> np.ndarray:
         h1, h2 = _split_hash(hashes)
         i = np.arange(self.k, dtype=np.uint64)[:, None]
@@ -112,44 +116,55 @@ class PartitionedBloom:
         return bf
 
 
+# bitmap_construct_agg's bucket: 4 KiB = 32768 bit positions, bit b of
+# the bucket at byte b >> 3, mask 1 << (b & 7) — the same LSB-first
+# layout as PartitionedBloom.parts
+_BUCKET_BYTES = 4096
+
+
+def _bloom_buckets(
+    df: DataFrame, hash_col: str, n_parts: int, bits_per_part: int, k: int,
+) -> DataFrame:
+    """(bucket, bitmap) rows of the filter's bit set, JVM-only.
+
+    The parts are laid end to end as one bit set, sub-filter ``part``'s
+    position ``pos`` at global bit ``g = part·bits + pos``; each hash
+    explodes into its k bit numbers and ``bitmap_construct_agg`` ORs
+    them into 4 KiB buckets (partial-combined per task, so the shuffle
+    carries at most one filter's bytes per task, never the hashes)."""
+    h = F.col(hash_col).cast("long")
+    h1 = F.shiftrightunsigned(h, 32)
+    h2 = h.bitwiseAND(F.lit(0xFFFFFFFF))
+    base = F.pmod(h, F.lit(n_parts)) * F.lit(bits_per_part)
+    # h1, h2 < 2^32, so h1 + i·h2 cannot overflow a signed long
+    g1 = F.explode(F.array(*[
+        base + F.pmod(h1 + h2 * F.lit(i), F.lit(bits_per_part)) + F.lit(1)
+        for i in range(k)
+    ]))
+    return (
+        df.select(g1.alias("g1"))
+        .groupBy(F.bitmap_bucket_number("g1").alias("bucket"))
+        .agg(F.bitmap_construct_agg(F.bitmap_bit_position("g1")).alias("bitmap"))
+    )
+
+
 def build_bloom(
     df: DataFrame, hash_col: str = "url_hash",
     n_parts: int = 8, bits_per_part: int = 1 << 20, k: int = 5,
 ) -> PartitionedBloom:
-    """Distributed build, co-partitioned with the filter: hashes are
-    shuffled by sub-filter id (``hash % n_parts``) so each task builds
-    only its own part(s) and ships exactly those bytes — total traffic
-    = one filter (n_parts × bits/8), independent of task count, never
-    the hashes."""
-    part_bytes = bits_per_part // 8
-
-    def build_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local: dict[int, PartitionedBloom] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            hashes = pdf[hash_col].to_numpy().astype(np.uint64)
-            pids = (hashes % np.uint64(n_parts)).astype(np.int64)
-            for pid in np.unique(pids):
-                bf = local.setdefault(
-                    int(pid), PartitionedBloom(n_parts, bits_per_part, k)
-                )
-                bf.add_hashes(hashes[pids == pid])
-        for pid, bf in local.items():
-            yield pd.DataFrame({"part": [pid], "blob": [bf.parts[pid].tobytes()]})
-
-    rows = (
-        df.select(F.col(hash_col).cast("long").alias(hash_col))
-        .repartition(n_parts, F.pmod(F.col(hash_col), F.lit(n_parts)))
-        .mapInPandas(build_parts, schema="part int, blob binary")
-        .collect()
-    )
-    merged = PartitionedBloom(n_parts, bits_per_part, k)
-    for row in rows:
-        arr = np.frombuffer(bytes(row.blob), dtype=np.uint8)
-        assert arr.size == part_bytes
-        np.bitwise_or(merged.parts[int(row.part)], arr, out=merged.parts[int(row.part)])
-    return merged
+    """Distributed build as one JVM aggregate (``_bloom_buckets``): the
+    driver receives at most one filter's worth of 4 KiB buckets and
+    copies them in.  Byte-identical to ``PartitionedBloom.add_hashes``
+    over the same hashes."""
+    flat = np.zeros(n_parts * (bits_per_part // 8), dtype=np.uint8)
+    for row in _bloom_buckets(df, hash_col, n_parts, bits_per_part, k).collect():
+        start = (int(row.bucket) - 1) * _BUCKET_BYTES
+        # the last bucket may run past the filter's end (its tail is 0)
+        chunk = np.frombuffer(bytes(row.bitmap), dtype=np.uint8)[: flat.size - start]
+        flat[start:start + chunk.size] |= chunk
+    bloom = PartitionedBloom(n_parts, bits_per_part, k)
+    bloom.parts = np.split(flat, n_parts)
+    return bloom
 
 
 def bloom_probe_col(spark, bloom: PartitionedBloom, hash_col: str = "url_hash"):
@@ -177,16 +192,19 @@ def filter_unseen(
     bloom: PartitionedBloom,
     hash_col: str = "url_hash",
 ) -> DataFrame:
-    """Definitely-unseen (Bloom negative) rows bypass the join; only the
-    maybe-seen minority pays the exact ``left_anti`` backstop (SURVEY
-    C3).  With a healthy FPP the anti-join side is ~|seen ∩ candidates|
-    + ε, not |candidates|.
+    """``candidates`` minus the ``url``s in ``seen``: definitely-unseen
+    (Bloom negative) rows bypass the join; only the maybe-seen minority
+    pays the exact ``left_anti`` backstop (SURVEY C3).  With a healthy
+    FPP the anti-join side is ~|seen ∩ candidates| + ε, not |candidates|.
+
+    The backstop joins on ``url``, not ``hash_col``: two distinct URLs
+    may share a 64-bit hash (≈ n²/2⁶⁵ pairs among n URLs — about 2.7 at
+    10^10), and a hash-keyed check would drop the unseen one forever.
     """
-    seen_keys = seen.select(hash_col).distinct()
     probed = candidates.withColumn("_maybe", bloom_probe_col(spark, bloom, hash_col))
     sure_new = probed.filter(~F.col("_maybe")).drop("_maybe")
     checked = (
         probed.filter(F.col("_maybe")).drop("_maybe")
-        .join(seen_keys, hash_col, "left_anti")
+        .join(seen.select("url"), "url", "left_anti")
     )
     return sure_new.unionByName(checked)

@@ -11,8 +11,8 @@ drives the SAME dequeue→fetch→parse→commit pipeline:
 * source: a file stream of seed rows (one micro-batch per file via
   ``maxFilesPerTrigger``);
 * ``foreachBatch``: admit the new seeds into the frontier snapshot
-  (URL-seen checked against the running Bloom state), then run crawl
-  epochs until the new work drains;
+  (the crawl's URL-seen test: an exact anti-join on ``url`` against the
+  frontier), then run crawl epochs until the new work drains;
 * sink: the usual snapshot tables — the streaming query adds no second
   storage path, so batch and streaming crawls are bit-identical
   (tests/test_streaming_crawl.py).
@@ -41,7 +41,9 @@ def read_seed_stream(spark: SparkSession, path: str, max_files: int = 1) -> Data
 
 
 def admit_seeds(job: CrawlJob, seeds: DataFrame) -> int:
-    """Admission for a micro-batch of discovered seeds.
+    """Admission for a micro-batch of discovered seeds — the crawl's
+    one URL-seen test (an epoch dequeues pending rows without one,
+    because this keeps the frontier unique by ``url``).
 
     Dedup is a single exact ``left_anti`` on ``url`` against the whole
     frontier: the Bloom filter tracks FETCHED URLs only, so it cannot
@@ -93,9 +95,7 @@ def admit_seeds(job: CrawlJob, seeds: DataFrame) -> int:
         n_new = counts.get("pending", 0)
         n_blocked = counts.get("blocked", 0)
         # 'total' counts every non-blocked admitted row — imported rows
-        # with status='fetched' must widen total (keeping the scheduler's
-        # "pending == total ⇒ nothing fetched" proof sound) and must be
-        # committed, not dropped
+        # with status='fetched' widen total and are committed, not dropped
         n_total_add = sum(counts.values()) - n_blocked
         m = job.frontier_tbl.manifest()["metrics"]
         # touched-partition admission: rewrite only the period

@@ -46,7 +46,7 @@ def main() -> None:
     spark = get_spark(f"crawl_bench_{args.cores}", cores=args.cores)
     # Every shuffle in the epoch path is explicitly partitioned (range
     # shuffle pinned by persist in dequeue_rank, fetch repartition(n),
-    # Bloom build by sub-filter id) — AQE cannot improve those plans, and its
+    # Bloom build by bitmap bucket) — AQE cannot improve those plans, and its
     # per-query re-optimization rounds cost ~0.5-1 s of driver latency
     # per epoch (interleaved A/B, identical output CRC).  AQE stays ON
     # for the analytics tier (session.py default) where it earns it.
@@ -61,8 +61,9 @@ def main() -> None:
     try:
         # budget = half the frontier → two epochs: epoch 1 dequeues with
         # an empty seen set, epoch 2 exercises the steady-state path
-        # (Bloom pre-pass + exact anti-join against 50k fetched URLs),
-        # so the measured throughput covers the full dequeue pipeline.
+        # (a frontier already holding 50k fetched rows, a Bloom already
+        # holding their URLs), so the measured throughput covers the
+        # full epoch pipeline.
         job = CrawlJob(
             spark, wd,
             budget_per_host=(n_urls + 1) // 2,

@@ -18,6 +18,7 @@ from fide_crawler_spark.operators.parse import reassemble_spans, explode_spans
 from fide_crawler_spark.operators.rank import dequeue_rank
 from fide_crawler_spark.operators.scheduler import CrawlJob
 from fide_crawler_spark.oracle.sequential import run_oracle
+from fide_crawler_spark.streaming.crawl_stream import admit_seeds
 
 SEEDS = ["1503014", "2020009", "35009192"]
 START, N_MONTHS, BUDGET = "2023-01-01", 5, 4
@@ -191,34 +192,57 @@ def test_flaky_fetch_retries_until_complete(spark, frontier_rows, oracle, tmp_pa
 
 
 def test_duplicate_admission_not_refetched(spark, frontier_rows, tmp_path):
-    """The URL-seen path must actually filter: after fetching everything,
-    append NEW pending rows for already-fetched URLs (the
-    discovered-link / re-seed case) — they must be rejected by the Bloom
-    pre-pass + anti-join, not fetched twice."""
+    """The URL-seen test at admission must actually filter: after
+    fetching everything, re-discover 5 already-fetched URLs (the
+    discovered-link / re-seed case) — admission's anti-join on url
+    rejects them, so nothing is fetched twice."""
     wd = str(tmp_path / "dupadmit")
     j = CrawlJob(spark, wd, budget_per_host=BUDGET)
     j.init(spark.createDataFrame(frontier_rows))
     j.run()
     n_docs_before = j.docs_tbl.read(spark).count()
 
-    # re-admit 5 already-fetched URLs as fresh pending rows (via the
-    # partition-aware commit, as the streaming admit path does)
     dup_rows = [dict(r, status="pending", epoch=-1) for r in frontier_rows[:5]]
-    frontier = j.frontier_tbl.read(spark)
-    dups = spark.createDataFrame(dup_rows).withColumn(
-        "url_hash", F.xxhash64("url")
-    ).select(*frontier.columns)
-    touched = [r["period"] for r in dups.select("period").distinct().collect()]
-    j.frontier_tbl.commit_partition_overwrite(
-        frontier.filter(F.col("period").isin(touched)).unionByName(dups),
-        "period",
-        touched_values=touched,
-        metrics={**j.frontier_tbl.manifest()["metrics"], "pending": 5},
-        state={"urlseen-bloom.bin": j.frontier_tbl.state("urlseen-bloom.bin")},
-    )
+    assert admit_seeds(j, spark.createDataFrame(dup_rows)) == 0
     stats = j.run_epoch()
     assert stats["dequeued"] == 0, "seen URLs must not be re-dequeued"
     assert j.docs_tbl.read(spark).count() == n_docs_before
+
+
+def test_init_keeps_one_row_per_url(spark, frontier_rows, tmp_path):
+    """A duplicated seed yields two copies of each of its URLs with the
+    same priority tuple: init keeps one, so each URL is committed once,
+    in the oracle's order."""
+    rows = frontier_rows + frontier_rows[:N_MONTHS]
+    j = CrawlJob(spark, str(tmp_path / "dupseed"), budget_per_host=BUDGET)
+    j.init(spark.createDataFrame(rows))
+    assert j.pending_count() == len(frontier_rows)
+    j.run()
+    docs = j.docs_tbl.read(spark)
+    assert docs.count() == docs.select("doc_id").distinct().count() == len(frontier_rows)
+    assert j.crawl_order() == run_oracle(rows, BUDGET).crawl_order
+
+
+def test_epoch_dequeue_plan_has_no_python(spark, frontier_rows, tmp_path, monkeypatch):
+    """The epoch dequeues pending rows as they are: no URL-seen probe (a
+    Python UDF) in the plan that feeds dequeue_rank."""
+    import fide_crawler_spark.operators.scheduler as scheduler
+    from fide_crawler_spark.plans import formatted_plan
+
+    plans = []
+
+    def capture(df, *a, **kw):
+        plans.append(formatted_plan(df))
+        return dequeue_rank(df, *a, **kw)
+
+    monkeypatch.setattr(scheduler, "dequeue_rank", capture)
+    j = CrawlJob(spark, str(tmp_path / "plan"), budget_per_host=BUDGET)
+    j.init(spark.createDataFrame(frontier_rows))
+    j.run_epoch()
+    j.run_epoch()  # the second epoch has fetched rows in the frontier
+    assert len(plans) == 2
+    for plan in plans:
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_retention_bounds_history_and_preserves_output(

@@ -100,8 +100,8 @@ def test_scheduler_force_recrawl_end_to_end(spark, tmp_path):
     """Full loop on a default CrawlJob: crawl all, force-recrawl one URL,
     re-run → the re-fetched doc lands in a later epoch with identical
     spans.  The committed Bloom still says maybe-seen for that URL, so
-    re-admission rests on the frontier status flip + the exact
-    anti-join backstop alone."""
+    re-admission rests on the frontier status flip alone (the epoch
+    dequeues pending rows without a URL-seen test)."""
     import numpy as np
 
     from fide_crawler_spark.fixtures import seed_frontier_rows

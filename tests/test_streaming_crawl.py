@@ -133,3 +133,20 @@ def test_blocked_metric_survives_epochs(spark, tmp_path):
         q.stop()
     m = job.frontier_tbl.manifest()["metrics"]
     assert m["blocked"] == 2, m
+
+
+def test_rediscovered_imported_fetched_url_not_admitted(spark, tmp_path):
+    """An imported frontier's fetched row is URL-seen: re-discovering it
+    admits 0 rows, and the crawl fetches only the pending ones."""
+    from fide_crawler_spark.streaming.crawl_stream import admit_seeds
+
+    rows = seed_frontier_rows(["6060606"], "2023-01-01", 3)
+    job = CrawlJob(spark, str(tmp_path / "imported"), budget_per_host=BUDGET)
+    job.init(spark.createDataFrame([dict(rows[0], status="fetched")] + rows[1:]))
+    assert admit_seeds(job, spark.createDataFrame([rows[0]])) == 0
+    assert job.frontier_tbl.read(spark).count() == 3
+    job.run()
+    docs = job.docs_tbl.read(spark)
+    assert sorted(r["doc_id"] for r in docs.select("doc_id").collect()) == sorted(
+        r["url"] for r in rows[1:]
+    )
